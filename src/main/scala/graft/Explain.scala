@@ -1,20 +1,13 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
-/** Dev tool: dump formatted plans for the headline queries (plan
-  * audit: pushdown, pruning, join strategies, codegen spans). */
+/** Dev tool: dump formatted plans (pushdown, pruning, join strategies,
+  * codegen spans) for the named queries, or for every query in bench
+  * order, under the session config the bench times. */
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.local(Session.cpus(4))
     spark.sparkContext.setLogLevel("ERROR")
     val names = if (args.nonEmpty) args.toSeq else Bench.headline
     // SPARK_GRAFT_EXPLAIN_EXECUTE=1: materialize first, then print the

@@ -10,9 +10,7 @@ import graft.functions._
   * thrift/connect clients) can call them directly:
   *
   * {{{
-  * SparkSession.builder()
-  *   .config("spark.sql.extensions", "graft.GraftExtensions")
-  *   ...
+  * // spark.sql.extensions=graft.GraftExtensions, as in graft.Session
   * spark.sql("SELECT minhash_sig(text, 3, 128) FROM docs")
   * }}}
   *

@@ -1222,10 +1222,10 @@ object Ann {
       // aggregate input rows and 512 grouping keys for the identical
       // integer sums (bit-for-bit: Σ per (m, code, d) is
       // order-independent either way). At sf0.1 the two shapes time
-      // identically (~1.2 s JIT-warm, interleaved A/B in
-      // [[graft.tools.ProfIvfPq]] — the apparent 3→1 s win was JIT
-      // warmup); the 8× row reduction is kept for the scale path,
-      // where aggregate input rows dominate fixed overhead.
+      // identically (~1.2 s JIT-warm, interleaved A/B — the
+      // apparent 3→1 s win was JIT warmup); the 8× row reduction is
+      // kept for the scale path, where aggregate input rows dominate
+      // fixed overhead.
       val dimSums = (0 until PqSub).map(d =>
         sum(expr(s"iv[m * $PqSub + $d]")).as(s"s$d"))
       val stats = withCodes(e.select($"vec_id", $"iv"), cent)
@@ -1349,7 +1349,8 @@ object Ann {
     * encode scan (the [[graft.functions.PqEncode]] codegen kernel) +
     * a map-side ×[[PqM]] subspace explode on 8-dim slices into a
     * combinable [[PqM]]-key aggregate; the codebook rides as a
-    * 512-long literal. */
+    * 512-long literal, so the error fold never joins back per
+    * subspace. */
   def qPqDistortion(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val e = intEmb(s, dir)

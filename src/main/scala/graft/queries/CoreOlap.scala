@@ -1103,7 +1103,10 @@ object CoreOlap {
     // aggregates. Split into single-distinct branches (each plans as
     // a two-level aggregate over just its own column, no Expand) and
     // join on the 3-row flag key (broadcast). Result identical: same
-    // exact distinct counts, same rows.
+    // exact distinct counts, same rows — because l_returnflag is
+    // never NULL (TPC-H declares it NOT NULL). The inner equi-joins
+    // would drop a NULL group that GROUP BY keeps; reusing this split
+    // on a nullable key needs a null-safe (<=>) join.
     val li = Tables.lineitem(s, dir)
     val orders = li.groupBy($"l_returnflag")
       .agg(countDistinct($"l_orderkey").as("n_orders"))

@@ -420,6 +420,10 @@ object Multimodal {
       .select($"d1", $"d2", $"hamming")
   }
 
+  /** Perceptual (dHash-family) blob near-dup pairs: one binary decode
+    * pass into 4-int signatures, then [[phashPairsOf]]'s capped piece
+    * blocking. The candidate join must stay block-capped — an uncapped
+    * monochrome block would make it all-pairs. */
   def qBlobPhash(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     // three consumers (piece explode + both verify sides) — pin the
@@ -1271,7 +1275,12 @@ object Multimodal {
     * [[blobBatch]] per batch, all replay-guarded); the DuckDB oracle
     * recomputes the full corpus pair set brute-force and re-derives
     * each pair's arrival batch, so the hash certifies the streamed
-    * store's CONTENT, not just its shape. */
+    * store's CONTENT, not just its shape.
+    *
+    * Scale shape: the first execution builds the streamed lifecycle;
+    * the warm path is one scan of the batch-partitioned pairs store
+    * into a 3-group aggregate — the read must stay on that store and
+    * never touch the blobs. */
   def qBlobPhashBatches(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val (_, pairsPath) = ensurePhashStream(s, dir)

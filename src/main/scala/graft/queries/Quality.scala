@@ -364,7 +364,9 @@ object Quality {
     * Past ~3·10⁹ docs/side the full query's bigint products overflow
     * and the KS n for any published sensitivity target is far smaller
     * anyway — this entry is that documented slice as a hash-checked
-    * query, not a comment. */
+    * query, not a comment. Same plan shape as the full query, with
+    * the md5 predicate pushed to the document scan, so the sample
+    * prunes BEFORE the histogram aggregate. */
   def qKsDriftSampled(s: SparkSession, dir: String): DataFrame =
     ksDrift(s, Tables.documents(s, dir)
       .where(Text.splitBucketCol < KsSampleMilli))

@@ -648,6 +648,9 @@ object Spatial {
         round($"decl2" * 1000000).cast("long").as("de2_u6"))
   }
 
+  /** MOPS tracklet census per night over [[trackletPairs]]: the pair
+    * stage rides the zone grid ([[gridCandidates]]), never a
+    * detection-table self-join. */
   def qTracklets(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val cand = trackletPairs(s, dir)
@@ -1591,6 +1594,12 @@ object Spatial {
     // ensure(), 3 batches × every store-backed query sample. The
     // guards below re-check after healing, so a crashed append still
     // heals exactly as before; only the nothing-to-do path changed.
+    // committed() reads partition-dir existence as "this batch fully
+    // landed", which holds only AFTER healOwnedStore: its
+    // recoverAppends rolls every manifest-recorded move forward, and
+    // a crash before the manifest moved no files, so a surviving
+    // batch_id dir is complete. The heal calls must stay before the
+    // first committed() check.
     def committed(path: String): Boolean = {
       val pd = new org.apache.hadoop.fs.Path(path, s"batch_id=$batchId")
       Catalog.tableComplete(s, path) &&
@@ -2407,8 +2416,9 @@ object Spatial {
     * both engines), the census carries the exact ×10⁶ latitude sum as
     * the order-free content pin.
     *
-    * Scale shape: one catalog scan, per-row trig, ONE combinable
-    * aggregate on ≤18 keys. */
+    * Scale shape: one catalog scan, per-row trig (inside whole-stage
+    * codegen — it is the only per-row cost), ONE combinable aggregate
+    * on ≤18 keys. */
   def qGalacticDensity(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     points(s, dir)
@@ -2483,10 +2493,9 @@ object Spatial {
     * adaptive length the group density is scale-free by
     * construction, so the iterating frame stays a bounded fraction
     * of the data at any catalog size. */
-  /** The FoF linking-pair stream (d1, d2, band1, band2) — factored so
-    * [[graft.tools.ProfFof]] can time the grid pass apart from the CC
-    * closure. */
-  private[graft] def fofPairsForProf(s: SparkSession, dir: String): DataFrame = {
+  /** The FoF linking-pair stream (d1, d2, band1, band2) that feeds the
+    * CC closure. */
+  private def fofPairs(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val pts = points(s, dir)
     val link = fofLinkDeg(pts.count())
@@ -2500,7 +2509,7 @@ object Spatial {
 
   def qFofGroups(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val pairs = fofPairsForProf(s, dir)
+    val pairs = fofPairs(s, dir)
     Dedup.contractedComponents(pairs)
       .groupBy($"cluster_id".as("group_id"))
       .agg(count(lit(1)).as("n_members"),

@@ -2454,7 +2454,8 @@ object TimeSeries {
     * index path costs |distinct buckets| directory listings + the
     * probed row groups, independent of table size — the same
     * point-vs-scan gap Pserv's director index exists for, times k
-    * amortized into one planning round trip. */
+    * amortized into one planning round trip. A warm call hits the
+    * cached index and never rebuilds it. */
   def qObjectLookupMany(s: SparkSession, dir: String): DataFrame = {
     val idx = ensureObjectIndex(s, dir)
     graft.sources.ObjectIndex.lookupMany(s, idx, LookupIds)
@@ -3451,8 +3452,9 @@ object TimeSeries {
     * Scale shape: the per-object epoch rebase (window min) and ONE
     * sufficient-statistic aggregate carrying BOTH coordinates' sums
     * share the user_id shuffle — one exchange total, map-side
-    * combinable, no join, nothing driver-side; both Cramer chains
-    * run per-row on the |objects| reduced frame. */
+    * combinable, no join, nothing driver-side (the parallax-factor
+    * table lookups stay per-row codegen expressions); both Cramer
+    * chains run per-row on the |objects| reduced frame. */
   def qParallax(s: SparkSession, dir: String): DataFrame =
     parallaxFitOver(astromDesign(s, dir))
 
